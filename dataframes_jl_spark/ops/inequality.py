@@ -81,9 +81,9 @@ def gini(
         # SinglePartition task — use the range-partitioned global rank
         from .sorting import global_row_number
 
-        ranked = global_row_number(
-            base, cols=order, col_name="__i__", persist=True
-        ).select("__x__", "__i__")
+        ranked = global_row_number(base, cols=order, col_name="__i__").select(
+            "__x__", "__i__"
+        )
     dec = "decimal(38,0)"
     agg = ranked.groupBy(*gb).agg(
         F.count(F.lit(1)).alias("n"),

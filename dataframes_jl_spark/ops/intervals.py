@@ -9,25 +9,22 @@ is a partitioned window; the hard part is the WHOLE-TABLE merge,
 where the textbook single-node algorithm ("sort, then sweep carrying
 a running max end") looks inherently sequential.
 
-It isn't: like the distributed prefix scan in ops/window.py, the sweep
-state that crosses partition boundaries is tiny — for interval merging
-it is ONE number per partition (the max end seen so far) plus ONE
-count per partition (how many groups opened). So the plan is:
+It isn't: the sweep state that crosses partition boundaries is tiny —
+ONE number per partition (the max end seen so far) plus ONE count per
+partition (how many groups opened). So the whole-table path is two
+rounds of the engine's prefix scan (ops.window._range_parted +
+_pid_carries), over one range partition on (start, end, tiebreak):
 
-1. range-repartition + local sort on (start, end, tiebreak) — the same
-   parallel sampled shuffle global_row_number uses, persisted so every
-   job reads one boundary draw;
-2. job A (tiny): per-partition max(end) -> prefix-max "carry_max" per
-   partition, computed on the driver over #partitions rows;
-3. with carry_max inlined as a literal pid->value map, a row's
-   effective preceding max is greatest(local window max, carry) and
+1. carry A: per-partition max(end) -> exclusive prefix max, NaN
+   ordered above every double as in Spark's max/greatest. A row's
+   effective preceding max is greatest(local window max, carry), and
    its "opens a new group" flag is a pure executor expression;
-4. job B (tiny): per-partition flag totals -> prefix-sum group-id
-   offsets (rows before a partition's first flag belong to the last
-   group opened earlier, which offset_p indexes exactly);
-5. final pass: gid = local running flag sum + offset; groupBy(gid)
-   aggregates each merged span. One data shuffle (the range
-   partition), two #partitions-row jobs, one bounded groupBy.
+2. carry B: per-partition flag totals -> prefix-sum group-id offsets
+   (rows before a partition's first flag belong to the last group
+   opened earlier, which the offset indexes exactly);
+3. gid = local running flag sum + offset; groupBy(gid) aggregates each
+   merged span. One data shuffle (the range partition), two
+   #partitions-row jobs, one bounded groupBy.
 
 Touching intervals merge (new group only when start > preceding max):
 [1,3] + [3,5] -> [1,5].
@@ -35,7 +32,7 @@ Touching intervals merge (new group only when start > preceding max):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -88,63 +85,23 @@ def merge_intervals(
         )
 
     # ---- whole-table path: range partition + two tiny carry jobs ----
-    from pyspark import StorageLevel
+    from ..core.cache import hold
+    from .window import _add, _nan_max, _pid_carries, _range_parted
 
-    parted = (
-        src.repartitionByRange(*ob)
-        .sortWithinPartitions(*ob)
-        .withColumn("__pid__", F.spark_partition_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    parted = _range_parted(src, ob)
     w = Window.partitionBy("__pid__").orderBy(*ob)
-
-    # job A: per-partition max end -> exclusive prefix max per pid
-    ends = sorted(
-        (r["__pid__"], r["mx"])
-        for r in parted.groupBy("__pid__").agg(F.max(end_col).alias("mx")).collect()
-    )
-    carry_max: dict[int, object] = {}
-    acc = None
-    for pid, mx in ends:
-        if acc is not None:
-            carry_max[pid] = acc
-        acc = mx if acc is None or (mx is not None and mx > acc) else acc
-
-    def _carry_expr() -> Column | None:
-        if not carry_max:
-            return None
-        m = F.create_map(*[F.lit(x) for kv in carry_max.items() for x in kv])
-        return m[F.col("__pid__")]
-
-    carry = _carry_expr()
-    local_pmax = F.max(end_col).over(w.rowsBetween(Window.unboundedPreceding, -1))
-    pre = (
-        local_pmax
-        if carry is None
-        else F.greatest(local_pmax, carry)  # greatest skips NULLs
-    )
+    out, carries, _ = _pid_carries(parted, {"__c_max": (F.max(end_col), _nan_max)})
+    pre = F.max(end_col).over(w.rowsBetween(Window.unboundedPreceding, -1))
+    if carries["__c_max"] is not None:
+        pre = F.greatest(pre, carries["__c_max"])  # greatest skips NULLs
     flag = F.when(pre.isNull() | (F.col(start_col) > pre), 1).otherwise(0)
-    flagged = parted.withColumn("__flag__", flag)
-
-    # job B: per-partition flag totals -> exclusive prefix-sum offsets
-    totals = sorted(
-        (r["__pid__"], r["t"])
-        for r in flagged.groupBy("__pid__").agg(F.sum("__flag__").alias("t")).collect()
+    out, carries, _ = _pid_carries(
+        out.withColumn("__flag__", flag), {"__c_gid": (F.sum("__flag__"), _add)}
     )
-    offsets: dict[int, int] = {}
-    run = 0
-    for pid, t in totals:
-        offsets[pid] = run
-        run += int(t or 0)
-    omap = F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv])
-    gid = (
-        F.sum("__flag__").over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        + F.coalesce(omap[F.col("__pid__")], F.lit(0))
-    ).cast("bigint")
-    return (
-        flagged.withColumn("gid", gid)
-        .groupBy("gid")
-        .agg(*aggs)
+    gid = F.sum("__flag__").over(
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
+    if carries["__c_gid"] is not None:
+        gid = gid + F.coalesce(carries["__c_gid"], F.lit(0))
+    merged = out.withColumn("gid", gid.cast("bigint")).groupBy("gid").agg(*aggs)
+    return hold(merged, parted, df)  # df: propagate upstream handles

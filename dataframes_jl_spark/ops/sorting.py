@@ -113,71 +113,44 @@ def global_row_number(
     cols: str | Sequence | None = None,
     rev: bool = False,
     col_name: str = "__row_id__",
-    persist: bool = True,
     with_total: bool = False,
 ):
     """Distributed 1-based global rank under the given ordering — the
     scale path for positional semantics (SURVEY §7 hard part #1).
 
     ``row_number() OVER (ORDER BY …)`` plans a SinglePartition exchange:
-    every row through one task. Instead: range-repartition on the sort
-    key (parallel sampled shuffle), local sort, then per-partition
-    row_number + the cumulative row-count offset of all earlier
-    partitions (one tiny count job, #partitions rows collected). Total
-    order requires the ordering to be total — add a tie-break column.
+    every row through one task. Instead this runs the engine's prefix
+    scan (``ops.window._range_parted`` + ``_pid_carries``): per-partition
+    row_number plus the row count of all earlier partitions, from one
+    tiny count job (#partitions rows collected). Total order requires
+    the ordering to be total — add a tie-break column.
 
-    ``persist`` (default True) materializes the range-partitioned input
-    once (MEMORY_AND_DISK) and serves both the offsets count job and
-    the ranked output from it. This is a CORRECTNESS default, not just
-    a cost lever: the range partitioner samples boundaries with an
-    RDD-id-dependent seed, so without a pinned materialization the
-    count job and the caller's action can draw different boundaries
-    once partitions exceed the reservoir sample — offsets computed
-    against one partitioning applied to another would duplicate or
-    skip ranks silently. ``persist=False`` is safe only when the input
-    is small enough to be fully sampled (every partition fits the
-    reservoir) — fine for tests, not for scale. The persisted handle is
-    attached to the result as ``unpersist_handles`` (core.cache.hold);
-    release it with ``dataframes_jl_spark.release(result)`` once the
-    result is consumed (or session-wide ``spark.catalog.clearCache()``).
+    The range-partitioned input is persisted; the handle is attached to
+    the result as ``unpersist_handles`` (core.cache.hold). Release it
+    with ``dataframes_jl_spark.release(result)`` once the result is
+    consumed (or session-wide ``spark.catalog.clearCache()``).
+    ``with_total=True`` also returns the exact row total, which the
+    count job has already paid for — callers (global_ntile) need no
+    second full scan to learn n.
     """
+    from ..core.cache import hold
+    from .window import _add, _pid_carries, _range_parted
+
     if cols is None:
         cols = df.columns
     elif isinstance(cols, (str, order, Column)):
         cols = [cols]
     specs = _resolve(cols, rev)
-    parted = df.repartitionByRange(*specs).sortWithinPartitions(*specs)
-    if persist:
-        from pyspark import StorageLevel
-
-        parted = parted.persist(StorageLevel.MEMORY_AND_DISK)
-    with_pid = parted.withColumn("__pid__", F.spark_partition_id())
-    counts = sorted(
-        (r["__pid__"], r["cnt"])
-        for r in with_pid.groupBy("__pid__").agg(F.count(F.lit(1)).alias("cnt")).collect()
+    parted = _range_parted(df, specs)
+    out, carries, totals = _pid_carries(
+        parted, {"__c_cnt": (F.count(F.lit(1)), _add)}
     )
-    offsets, acc = {}, 0
-    for pid, cnt in counts:
-        offsets[pid] = acc
-        acc += cnt
-    omap = F.create_map(
-        *[F.lit(x) for pid_off in offsets.items() for x in pid_off]
-    )
-    w = Window.partitionBy("__pid__").orderBy(*specs)
-    out = (
-        with_pid.withColumn(
-            col_name,
-            (F.row_number().over(w) + F.coalesce(omap[F.col("__pid__")], F.lit(0))).cast("bigint"),
-        )
-        .drop("__pid__")
-    )
-    # `acc` is the exact row total, already paid for by the offsets
-    # count job — with_total hands it back so callers (global_ntile)
-    # don't run a second full scan just to learn n
-    from ..core.cache import hold
-
+    rn = F.row_number().over(Window.partitionBy("__pid__").orderBy(*specs))
+    if carries["__c_cnt"] is not None:
+        rn = rn + F.coalesce(carries["__c_cnt"], F.lit(0))
+    out = out.withColumn(col_name, rn.cast("bigint")).drop("__pid__", "__c_cnt")
     out = hold(out, parted, df)  # df: propagate upstream handles
-    return (out, acc) if with_total else out
+    return (out, totals["__c_cnt"] or 0) if with_total else out
 
 
 def global_ntile(

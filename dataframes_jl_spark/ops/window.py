@@ -5,12 +5,17 @@ All take an explicit ordering (and optional partitioning): Spark tables
 are unordered, so "cumulative over the frame's row order" must name the
 order. Partitioned windows scale (state per key, no global sort).
 Whole-column (unpartitioned) cumulatives — the reference's default mode
-— go through :func:`with_running`, which plans a range-repartitioned
-prefix aggregate (per-partition running state + broadcast per-partition
-carries) instead of the SinglePartition exchange a bare
-``ORDER BY``-only window would plan; the Column-form helpers refuse
-``partition_by=None`` so the single-task trap cannot be hit by
-accident.
+— go through :func:`with_running` instead of the SinglePartition
+exchange a bare ``ORDER BY``-only window would plan; the Column-form
+helpers refuse ``partition_by=None`` so the single-task trap cannot be
+hit by accident.
+
+This module also holds the engine's one distributed prefix scan,
+:func:`_range_parted` + :func:`_pid_carries` (range-partition, freeze
+the partition id, collect a per-partition summary, fold exclusive
+carries on the driver, ship them back keyed by partition id). It backs
+:func:`with_running`, ``ops.sorting.global_row_number`` and
+``ops.intervals.merge_intervals``.
 """
 
 from __future__ import annotations
@@ -66,13 +71,13 @@ def cummin(col, order_by, partition_by=None) -> Column:
     return F.min(col).over(_running(_window(order_by, partition_by)))
 
 
-def _cumprod_parts(c: Column, w: WindowSpec) -> tuple[Column, Column, Column]:
-    """Running (log-magnitude, #negatives, #zeros) — the decomposition
-    that turns a product into window-able sums. log is guarded to
-    nonzero inputs so an ANSI session never sees log(0)."""
-    log_mag = F.sum(F.when(c != 0, F.log(F.abs(c)))).over(w)
-    n_neg = F.sum(F.when(c < 0, 1).otherwise(0)).over(w)
-    n_zero = F.sum(F.when(c == 0, 1).otherwise(0)).over(w)
+def _cumprod_aggs(c: Column) -> tuple[Column, Column, Column]:
+    """(log-magnitude sum, #negatives, #zeros) aggregates — the
+    decomposition that turns a product into window-able sums. log is
+    guarded to nonzero inputs so an ANSI session never sees log(0)."""
+    log_mag = F.sum(F.when(c != 0, F.log(F.abs(c))))
+    n_neg = F.sum(F.when(c < 0, 1).otherwise(0))
+    n_zero = F.sum(F.when(c == 0, 1).otherwise(0))
     return log_mag, n_neg, n_zero
 
 
@@ -87,7 +92,7 @@ def cumprod(col, order_by, partition_by=None) -> Column:
     _require_partition(partition_by, "cumprod")
     c = F.col(col) if isinstance(col, str) else col
     w = _running(_window(order_by, partition_by))
-    return _cumprod_combine(*_cumprod_parts(c, w))
+    return _cumprod_combine(*(a.over(w) for a in _cumprod_aggs(c)))
 
 
 def diff(col, order_by, partition_by=None) -> Column:
@@ -140,15 +145,10 @@ def with_running(
     With ``partition_by`` this delegates to per-key windows (state per
     key, one hash shuffle). WITHOUT it, a naive ``ORDER BY``-only
     window would plan a SinglePartition exchange — every row through
-    one task. Instead this plans the classic distributed prefix scan:
-
-    1. range-repartition + local sort on ``order_by`` (parallel sampled
-       shuffle, same machinery as ops.sorting.global_row_number);
-    2. per-partition running aggregates over a ``__pid__`` window
-       (parallel, one window state per partition);
-    3. ONE tiny job collects per-partition totals/last-values
-       (#partitions rows), the exclusive prefix combine is computed on
-       the driver and broadcast back as a literal pid->carry map.
+    one task. Instead this runs the module's prefix scan: per-partition
+    running aggregates over the :func:`_range_parted` frame's ``__pid__``
+    window, plus per-partition carries from ONE :func:`_pid_carries`
+    summary job.
 
     Carry combine per op: sum adds the prefix total, max/min fold with
     greatest/least, prod folds the (log-magnitude, sign, zero-count)
@@ -171,146 +171,40 @@ def with_running(
         out = df
         for name, (op, src) in specs.items():
             c = F.col(src) if isinstance(src, str) else src
-            if op == "sum":
-                e = F.sum(c).over(wr)
-            elif op == "max":
-                e = F.max(c).over(wr)
-            elif op == "min":
-                e = F.min(c).over(wr)
+            if op in _AGGS:
+                e = _AGGS[op](c).over(wr)
             elif op == "prod":
-                e = _cumprod_combine(*_cumprod_parts(c, wr))
+                e = _cumprod_combine(*(a.over(wr) for a in _cumprod_aggs(c)))
             else:
                 prev = F.lag(c).over(w)
                 e = _lag_combine(op, c, prev)
             out = out.withColumn(name, e)
         return out
 
-    # ---- distributed unpartitioned path -------------------------------
-    # PERSIST is load-bearing, not a cost lever: the carry-summary
-    # collect below and the caller's final action are two separate jobs,
-    # and Spark's range partitioner samples boundaries with an
-    # RDD-id-dependent seed (the API warns the output "may not be
-    # consistent" across runs). Once partitions exceed the reservoir
-    # sample, the two jobs could draw different boundaries and rows near
-    # a boundary would land in different __pid__s — the driver carries
-    # would then double-count or drop them silently. Materializing the
-    # partitioning once (MEMORY_AND_DISK) pins a single boundary draw
-    # for both jobs. The handle rides the result as unpersist_handles
-    # (core.cache.hold) — dataframes_jl_spark.release(result) frees it;
-    # an evicted block recomputes THE SAME plan
-    # from the same shuffle output, which Spark replays deterministically
-    # only within one job — hence the persist rather than relying on it.
-    from pyspark import StorageLevel
-
-    parted = (
-        df.repartitionByRange(*ob)
-        .sortWithinPartitions(*ob)
-        .withColumn("__pid__", F.spark_partition_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    # ---- distributed unpartitioned path: range-partitioned prefix scan ----
+    parted = _range_parted(df, ob)
     w = Window.partitionBy("__pid__").orderBy(*ob)
     wr = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    # One summary job: per-partition totals / last values for every spec.
-    aggs = []
+    carry_specs = {}
     for name, (op, src) in specs.items():
         c = F.col(src) if isinstance(src, str) else src
-        if op == "sum":
-            aggs.append(F.sum(c).alias(f"__t_{name}"))
-        elif op == "max":
-            aggs.append(F.max(c).alias(f"__t_{name}"))
-        elif op == "min":
-            aggs.append(F.min(c).alias(f"__t_{name}"))
+        if op in _FOLDS:
+            carry_specs[f"__c_{name}"] = (_AGGS[op](c), _FOLDS[op])
         elif op == "prod":
-            aggs += [
-                F.sum(F.when(c != 0, F.log(F.abs(c)))).alias(f"__tl_{name}"),
-                F.sum(F.when(c < 0, 1).otherwise(0)).alias(f"__tn_{name}"),
-                F.sum(F.when(c == 0, 1).otherwise(0)).alias(f"__tz_{name}"),
-            ]
+            for tag, agg in zip("lnz", _cumprod_aggs(c)):
+                carry_specs[f"__c{tag}_{name}"] = (agg, _add)
         else:
-            # Last row's value by ordering; struct-wrap so a NULL value
-            # is carried (max_by skips NULL values, structs are not NULL).
-            aggs.append(
-                F.max_by(F.struct(c.alias("v")), F.struct(*ob)).alias(f"__t_{name}")
-            )
-    summary_df = parted.groupBy("__pid__").agg(*aggs)
-    summary = sorted(summary_df.collect(), key=lambda r: r["__pid__"])
-
-    # Exclusive prefix combine per spec, computed on the driver over the
-    # tiny (#partitions-row) summary. Each carry is a pid -> value
-    # series; how it reaches the executors depends on partition count:
-    # a literal map inlines join-free for typical counts, but at many
-    # thousands of partitions a 2N-literal expression bloats the plan,
-    # so the carries switch to ONE broadcast-joined table instead.
-    carry_series: dict[str, list] = {}
-    carry_types: dict[str, object] = {}
-    stypes = {f.name: f.dataType for f in summary_df.schema.fields}
-
-    def _scan(colkey: str, tname: str, fold, dtype) -> None:
-        acc, series = None, []
-        for r in summary:
-            series.append(acc)
-            t = r[tname] if not tname.endswith(".v") else r[tname[:-2]]["v"]
-            if tname.endswith(".v"):
-                acc = t  # lag carry: last value, NULL included
-            elif t is not None:
-                acc = t if acc is None else fold(acc, t)
-        carry_series[colkey] = series
-        carry_types[colkey] = dtype
-
-    for name, (op, src) in specs.items():
-        if op in ("sum", "max", "min"):
-            fold = {
-                "sum": lambda a, b: a + b,
-                "max": _nan_max,
-                "min": _nan_min,
-            }[op]
-            _scan(f"__c_{name}", f"__t_{name}", fold, stypes[f"__t_{name}"])
-        elif op == "prod":
-            _scan(f"__cl_{name}", f"__tl_{name}", lambda a, b: a + b,
-                  stypes[f"__tl_{name}"])
-            _scan(f"__cn_{name}", f"__tn_{name}", lambda a, b: a + b,
-                  stypes[f"__tn_{name}"])
-            _scan(f"__cz_{name}", f"__tz_{name}", lambda a, b: a + b,
-                  stypes[f"__tz_{name}"])
-        else:
-            _scan(f"__c_{name}", f"__t_{name}.v", None,
-                  stypes[f"__t_{name}"]["v"].dataType)
-
-    big = len(summary) > _CARRY_MAP_MAX
-    if big:
-        from pyspark.sql.types import StructField, StructType
-
-        fields = [StructField("__pid__", stypes["__pid__"])]
-        fields += [StructField(k, carry_types[k]) for k in carry_series]
-        rows = [
-            tuple([summary[i]["__pid__"]] + [carry_series[k][i] for k in carry_series])
-            for i in range(len(summary))
-        ]
-        cdf = parted.sparkSession.createDataFrame(rows, StructType(fields))
-        out = parted.join(F.broadcast(cdf), on="__pid__", how="left")
-    else:
-        out = parted
-
-    def _carry(colkey: str):
-        """Carry expression for one series, or None if the whole series
-        is empty (NULL carry everywhere)."""
-        series = carry_series[colkey]
-        if all(v is None for v in series):
-            return None
-        if big:
-            return F.col(colkey)
-        items = [
-            (summary[i]["__pid__"], v) for i, v in enumerate(series) if v is not None
-        ]
-        m = F.create_map(*[F.lit(x) for pv in items for x in pv])
-        return m[F.col("__pid__")]
+            # last row's value by ordering; struct-wrap so a NULL value
+            # is carried (max_by skips NULL values, structs are not NULL)
+            last = F.max_by(F.struct(c.alias("v")), F.struct(*ob))["v"]
+            carry_specs[f"__c_{name}"] = (last, _last)
+    out, carries, _ = _pid_carries(parted, carry_specs)
 
     for name, (op, src) in specs.items():
         c = F.col(src) if isinstance(src, str) else src
-        if op in ("sum", "max", "min"):
-            carry = _carry(f"__c_{name}")
-            local = {"sum": F.sum, "max": F.max, "min": F.min}[op](c).over(wr)
+        if op in _FOLDS:
+            carry = carries[f"__c_{name}"]
+            local = _AGGS[op](c).over(wr)
             if carry is None:
                 e = local
             elif op == "sum":
@@ -318,12 +212,8 @@ def with_running(
             else:
                 e = (F.greatest if op == "max" else F.least)(local, carry)
         elif op == "prod":
-            local_l, local_n, local_z = _cumprod_parts(c, wr)
-            cl, cn, cz = (
-                _carry(f"__cl_{name}"),
-                _carry(f"__cn_{name}"),
-                _carry(f"__cz_{name}"),
-            )
+            local_l, local_n, local_z = (a.over(wr) for a in _cumprod_aggs(c))
+            cl, cn, cz = (carries[f"__c{tag}_{name}"] for tag in "lnz")
             log_mag = (
                 local_l if cl is None else F.coalesce(local_l + cl, local_l, cl)
             )
@@ -331,16 +221,115 @@ def with_running(
             n_zero = local_z if cz is None else local_z + F.coalesce(cz, F.lit(0))
             e = _cumprod_combine(log_mag, n_neg, n_zero)
         else:  # diff / reldiff / pct_change
-            carry = _carry(f"__c_{name}")
+            carry = carries[f"__c_{name}"]
             prev = F.lag(c).over(w)
             if carry is not None:
                 prev = F.when(F.row_number().over(w) == 1, carry).otherwise(prev)
             e = _lag_combine(op, c, prev)
         out = out.withColumn(name, e)
-    drop = ["__pid__"] + (list(carry_series) if big else [])
     from ..core.cache import hold
 
-    return hold(out.drop(*drop), parted, df)  # df: upstream handles
+    # df: propagate upstream handles
+    return hold(out.drop("__pid__", *carry_specs), parted, df)
+
+
+def _range_parted(df: DataFrame, order) -> DataFrame:
+    """``df`` range-partitioned and locally sorted on ``order``, with
+    ``spark_partition_id()`` frozen into a ``__pid__`` column and the
+    result persisted (MEMORY_AND_DISK) — the first half of the prefix
+    scan shared by :func:`with_running`, ``ops.sorting.global_row_number``
+    and ``ops.intervals.merge_intervals``.
+
+    The persist is load-bearing, not a cost lever: the carry-summary
+    collect in :func:`_pid_carries` and the caller's action are separate
+    jobs, and Spark's range partitioner samples boundaries with an
+    RDD-id-dependent seed (the API warns the output "may not be
+    consistent" across runs). Once partitions exceed the reservoir
+    sample, two jobs could draw different boundaries, rows near a
+    boundary would land in different partitions, and the driver carries
+    would double-count or drop them silently. Materializing the
+    partitioning once pins one boundary draw and one ``__pid__`` per row
+    for every job (the contract session.py's cached-output-partitioning
+    conf relies on). Callers attach the handle to their result with
+    core.cache.hold, so ``dataframes_jl_spark.release(result)`` frees it.
+    """
+    from pyspark import StorageLevel
+
+    return (
+        df.repartitionByRange(*order)
+        .sortWithinPartitions(*order)
+        .withColumn("__pid__", F.spark_partition_id())
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+
+
+def _pid_carries(parted: DataFrame, specs: dict):
+    """Second half of the prefix scan: ONE job collects a per-partition
+    summary of every spec over a :func:`_range_parted` frame, and the
+    driver folds each into an exclusive prefix carry per partition.
+
+    ``specs`` maps key -> ``(aggregate Column, fold)``, fold one of
+    :func:`_add`, :func:`_nan_max`, :func:`_nan_min` (NULL summaries
+    skipped, as the aggregates skip NULLs) or :func:`_last` (the
+    previous partition's value, NULL included — the lag family).
+
+    Returns ``(frame, carries, totals)``: ``carries[key]`` is a Column
+    holding the fold over all EARLIER partitions (NULL for the first),
+    or None when that carry is NULL everywhere; ``totals[key]`` is the
+    inclusive fold over every partition (None if there are none).
+    Carries inline as a literal pid->value map; above _CARRY_MAP_MAX
+    partitions they ship as ONE broadcast-joined table whose columns
+    are named by the keys, and ``frame`` is ``parted`` with that table
+    joined. Build on ``frame`` and drop ``__pid__`` and the keys from
+    the result.
+    """
+    summary_df = parted.groupBy("__pid__").agg(
+        *[agg.alias(key) for key, (agg, _) in specs.items()]
+    )
+    summary = sorted(summary_df.collect(), key=lambda r: r["__pid__"])
+    pids = [r["__pid__"] for r in summary]
+    series, totals = {}, {}
+    for key, (_, fold) in specs.items():
+        acc, carried = None, []
+        for r in summary:
+            carried.append(acc)
+            t = r[key]
+            if t is not None or fold is _last:
+                acc = t if acc is None else fold(acc, t)
+        totals[key] = acc
+        if any(v is not None for v in carried):
+            series[key] = carried
+
+    carries = dict.fromkeys(specs)
+    if len(summary) > _CARRY_MAP_MAX and series:
+        from pyspark.sql.types import IntegerType, StructField, StructType
+
+        fields = [StructField("__pid__", IntegerType())] + [
+            StructField(k, summary_df.schema[k].dataType) for k in series
+        ]
+        rows = [
+            tuple([pid] + [series[k][i] for k in series])
+            for i, pid in enumerate(pids)
+        ]
+        cdf = parted.sparkSession.createDataFrame(rows, StructType(fields))
+        carries.update((k, F.col(k)) for k in series)
+        return parted.join(F.broadcast(cdf), on="__pid__", how="left"), carries, totals
+
+    for key, carried in series.items():
+        items = [(pid, v) for pid, v in zip(pids, carried) if v is not None]
+        carries[key] = F.create_map(*[F.lit(x) for pv in items for x in pv])[
+            F.col("__pid__")
+        ]
+    return parted, carries, totals
+
+
+def _add(a, b):
+    return a + b
+
+
+def _last(a, b):
+    """Lag-family fold: the latest partition's value, NULL included."""
+    return b
 
 
 def _nan_max(a, b):
@@ -362,6 +351,10 @@ def _nan_min(a, b):
     if isinstance(b, float) and b != b:
         return a
     return min(a, b)
+
+
+_AGGS = {"sum": F.sum, "max": F.max, "min": F.min}
+_FOLDS = {"sum": _add, "max": _nan_max, "min": _nan_min}
 
 
 def _lag_combine(op: str, c: Column, prev: Column) -> Column:

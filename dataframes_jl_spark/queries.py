@@ -13348,16 +13348,6 @@ def q_multimodal_pgm(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _netpbm_gate(
         synth_decode_features(ids, "pgm", "media_id", width=8, height=6)
     )
-    feats = decode_images(imgs, "payload", "media_id", fake=False)
-    return feats.select(
-        "media_id",
-        "width",
-        "height",
-        "channels",
-        (F.floor(F.col("mean_luma") * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias(
-            "mean_luma"
-        ),
-    )
 
 
 @register(

@@ -4,6 +4,7 @@ reshape, windows, NA aggregates — metamorphic style where possible."""
 from __future__ import annotations
 
 import math
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
@@ -312,13 +313,25 @@ def test_with_running_nan_values_match_global_window(spark):
             )
 
 
-def test_with_running_broadcast_carry_path(spark, monkeypatch):
-    """Above _CARRY_MAP_MAX partitions the carries ship as ONE
-    broadcast-joined table instead of literal maps; results must be
-    bit-identical and the plan must stay SinglePartition-free."""
-    import numpy as np
+@contextmanager
+def _spark_conf(spark, key, value):
+    """Set one session conf for the block, restoring it afterwards."""
+    saved = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, saved)
 
-    import dataframes_jl_spark.ops.window as W
+
+# AQE would coalesce a small range shuffle into one partition (one pid,
+# no carries at all); the prefix-scan tests below turn this off
+_COALESCE = "spark.sql.adaptive.coalescePartitions.enabled"
+
+
+def _scan_input(spark):
+    """3000 ordered rows with NULLs and zeros, spread over 7 partitions."""
+    import numpy as np
 
     rng = np.random.default_rng(5)
     vals = rng.normal(size=3000).round(3)
@@ -327,22 +340,104 @@ def test_with_running_broadcast_carry_path(spark, monkeypatch):
     rows = [
         (int(i), None if np.isnan(v) else float(v)) for i, v in enumerate(vals)
     ]
-    df = spark.createDataFrame(rows, "t long, v double").repartition(7)
-    specs = {
-        "cs": ("sum", "v"),
-        "cp": ("prod", "v"),
-        "d": ("diff", "v"),
-    }
-    small = W.with_running(df, specs, "t").orderBy("t").toPandas()
-    monkeypatch.setattr(W, "_CARRY_MAP_MAX", 0)
-    out = W.with_running(df, specs, "t")
+    return spark.createDataFrame(rows, "t long, v double").repartition(7)
+
+
+def _with_running(df):
+    from dataframes_jl_spark.ops.window import with_running
+
+    specs = {"cs": ("sum", "v"), "cp": ("prod", "v"), "d": ("diff", "v")}
+    return with_running(df, specs, "t"), "t"
+
+
+def _global_row_number(df):
+    from dataframes_jl_spark.ops.sorting import global_row_number
+
+    return global_row_number(df, "t"), "t"
+
+
+def _merge_intervals(df):
+    from dataframes_jl_spark.ops.intervals import merge_intervals
+
+    spans = df.select(
+        "t",
+        F.col("t").alias("s"),
+        (F.col("t") + F.abs(F.coalesce("v", F.lit(0.0))) * 3).alias("e"),
+    )
+    return merge_intervals(spans, "s", "e", tiebreak=("t",)), "gid"
+
+
+# every operator built on ops.window's range-partitioned prefix scan
+_SCAN_USERS = {
+    "with_running": _with_running,
+    "global_row_number": _global_row_number,
+    "merge_intervals": _merge_intervals,
+}
+
+
+def _scan_result(user, df):
+    """(collected pandas frame, executed plan string) for one scan user."""
+    import dataframes_jl_spark as djs
+
+    out, key = _SCAN_USERS[user](df)
     plan = out._jdf.queryExecution().executedPlan().toString()
+    pdf = out.orderBy(key).toPandas()
+    djs.release(out)
+    return pdf, plan
+
+
+def _assert_frames_equal(a, b):
+    import numpy as np
+
+    assert list(a.columns) == list(b.columns) and len(a) == len(b)
+    for c in a.columns:
+        x, y = a[c].to_numpy(float), b[c].to_numpy(float)
+        nan = np.isnan(x) & np.isnan(y)
+        assert (nan | (np.abs(x - y) < 1e-12)).all(), c
+
+
+@pytest.mark.parametrize("user", sorted(_SCAN_USERS))
+def test_with_running_broadcast_carry_path(spark, monkeypatch, user):
+    """Above _CARRY_MAP_MAX partitions the carries ship as ONE
+    broadcast-joined table instead of literal maps; every user of the
+    prefix scan must give bit-identical results, and the plan must
+    stay SinglePartition-free."""
+    import dataframes_jl_spark.ops.window as W
+
+    df = _scan_input(spark)
+    with _spark_conf(spark, _COALESCE, "false"):
+        small, plan = _scan_result(user, df)
+        assert "BroadcastExchange" not in plan
+        monkeypatch.setattr(W, "_CARRY_MAP_MAX", 0)
+        big, plan = _scan_result(user, df)
+    assert "BroadcastExchange" in plan
     assert "SinglePartition" not in plan
-    big = out.orderBy("t").toPandas()
-    for c in specs:
-        a, b = small[c].to_numpy(float), big[c].to_numpy(float)
-        nan = np.isnan(a) & np.isnan(b)
-        assert (nan | (np.abs(a - b) < 1e-12)).all(), c
+    _assert_frames_equal(small, big)
+
+
+@pytest.mark.parametrize("user", sorted(_SCAN_USERS))
+def test_prefix_scan_ignores_cached_partitioning_conf(spark, user):
+    """The partition id is frozen into the persisted range-partitioned
+    rows, so letting AQE re-coalesce cached plans cannot hand a row
+    another partition's carry: over a multi-partition persisted input,
+    each user gives the same values with
+    spark.sql.optimizer.canChangeCachedPlanOutputPartitioning on and
+    off."""
+    from dataframes_jl_spark.ops.window import _range_parted
+
+    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    results = []
+    for value in ("true", "false"):
+        with _spark_conf(spark, key, value):
+            df = _scan_input(spark).persist()
+            assert df.count() == 3000
+            results.append(_scan_result(user, df)[0])
+            if value == "false":  # the cached range shuffle stays uncoalesced
+                parted = _range_parted(df, [F.col("t")])
+                assert parted.select("__pid__").distinct().count() > 1
+                parted.unpersist()
+            df.unpersist()
+    _assert_frames_equal(*results)
 
 
 def test_merge_intervals_fixture_and_paths_agree(spark):
@@ -377,6 +472,36 @@ def test_merge_intervals_fixture_and_paths_agree(spark):
 
     plan = merge_intervals(df, "s", "e", tiebreak=("id",))._jdf.queryExecution().executedPlan().toString()
     assert "SinglePartition" not in plan
+
+
+def test_merge_intervals_nan_end_carries_across_partitions(spark):
+    """A NaN end orders above every double in Spark's max/greatest, so
+    the interval carrying it swallows every later one. The whole-table
+    path's driver-side carry fold must order NaN the same way, or range
+    partitions after the NaN one split off again and the whole-table
+    and partitioned paths disagree (2507 spans vs 1501)."""
+    from dataframes_jl_spark.ops.intervals import merge_intervals
+
+    rows = [
+        (i, float(i), float("nan") if i == 1500 else i + 0.5)
+        for i in range(3000)
+    ]
+    df = spark.createDataFrame(rows, "id long, s double, e double").repartition(3)
+    with _spark_conf(spark, _COALESCE, "false"):  # keep >= 3 range partitions
+        whole = sorted(
+            (r.gid, r.s, r.n)
+            for r in merge_intervals(df, "s", "e", tiebreak=("id",)).collect()
+        )
+        via_part = sorted(
+            (r.gid, r.s, r.n)
+            for r in merge_intervals(
+                df.withColumn("k", F.lit(1)), "s", "e",
+                partition_by="k", tiebreak=("id",),
+            ).collect()
+        )
+    assert len(whole) == 1501
+    assert whole[-1] == (1501, 1500.0, 1500)
+    assert whole == via_part
 
 
 def test_table_diff_statuses_and_null_safety(spark):

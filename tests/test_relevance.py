@@ -141,15 +141,6 @@ def test_bm25_accepts_precomputed_stats(tiny_docs):
         stats.unpersist()
 
 
-def test_global_row_number_persist_path(spark):
-    from dataframes_jl_spark.ops.sorting import global_row_number
-
-    df = spark.range(0, 500).select((F.col("id") * 7 % 500).alias("v"))
-    a = global_row_number(df, "v").select("v", "__row_id__").collect()
-    b = global_row_number(df, "v", persist=True).select("v", "__row_id__").collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-
-
 def test_chunk_documents_windows_and_overlap(spark):
     from dataframes_jl_spark.llm.text import chunk_documents
 
